@@ -1,4 +1,4 @@
-"""HTML table render (K2) and its inverse parser (the HTML-payload fast path).
+"""HTML table render (K2) and its inverse parser (the HTML-payload path).
 
 Render parity target: ``ExtractedTable.html``
 (reference: src/img2table/tables/objects/extraction.py:144-174) including the
@@ -6,7 +6,9 @@ bs4 ``prettify`` line format of the golden fixture
 (reference: tests/tables/objects/test_data/table.html). The parser inverts
 that grammar — ``<table>/<tr>/<td colspan rowspan>`` with ``<br>`` for
 newlines — so HTML payloads embedded in transcript turns land in the same
-output schema as image/PDF payloads.
+output schema as image/PDF payloads: as grids (``html_grids``) that the
+extractor writes straight into its output columns and renders with
+``grid_html``, or as Tables (``parse_html_tables``).
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from __future__ import annotations
 import re
 from html import unescape
 from html.parser import HTMLParser
+from typing import NamedTuple
 
 from img2table_spark.kernels.objects import Cell, Table
 from img2table_spark.kernels.spans import CellSpan, create_all_rectangles
@@ -137,8 +140,8 @@ class _TableParser(HTMLParser):
         self._rowspan = 1
 
     def handle_starttag(self, tag, attrs):
-        # tag-frequency order (td ≫ tr ≫ table) — this is the per-turn hot
-        # loop; semantics identical to the original table-first chain.
+        # tag-frequency order (td ≫ tr ≫ table); semantics identical to the
+        # original table-first chain.
         if self._depth == 1:
             if tag == "td" or tag == "th":
                 cs = rs = 1
@@ -219,142 +222,294 @@ def _assemble_value(parts: list) -> str | None:
     return value or None
 
 
-# Fast path: a single regex pass over tags driving the SAME handler object —
-# identical state-machine semantics to HTMLParser.feed without goahead()'s
-# per-character scanning (the UDF hot path: ~60% of per-turn CPU was inside
-# html.parser). Inputs with constructs the scanner does not model fall back
-# to HTMLParser: comments/doctype/PI are sniffed up front (_NEEDS_SLOW);
-# anything the scanner leaves unmatched mid-stream — a '<' + letter-or-slash
-# sequence surviving into character data (e.g. '</ td>', unterminated tags)
-# or a <script>/<style> CDATA element whose raw content must not be
-# tag-parsed — aborts the fast pass (_FastFallback) and the caller replays
-# the input through a FRESH HTMLParser.
-_FAST_TAG_RE = re.compile(
-    r"<(/?)([a-zA-Z][-.a-zA-Z0-9:_]*)\s*((?:[^>\"']|\"[^\"]*\"|'[^']*')*?)(/?)>"
+# The scanner. A payload goes through _TableParser (html.parser) only when
+# the flat-table grammar below does not match it whole. The grammar admits
+# tables of rows of cells in any surrounding markup: text, whitespace and
+# tags between and around them, <thead>/<tbody>/<tfoot> and other ignored
+# tags, attributes (quoted, or bare printable ASCII), entities, <br> and
+# inline tags inside cells, a bare '<' that opens no tag, and upper-case
+# names. It rejects nested tables, comments, doctypes and processing
+# instructions, raw-text elements (<script>, <style> and the others some
+# html.parser versions read as raw text), cells or rows left open,
+# self-closed <table>/<tr>/<td>/<th>, and every tag html.parser might end or
+# name differently (non-ASCII whitespace, '<' or '>' in an attribute value,
+# names with '-', '.' or ':', '</ td>'). On what it admits, _TableParser's
+# state machine reduces to: each <table>...</table> is a table, each
+# <tr>...</tr> in it a row, each <td|th>...</td|th> in that a cell, and
+# nothing else counts but a cell's text runs and its <br> tags. So one
+# fullmatch and one findall give the (value, colspan, rowspan) rows
+# _TableParser would, with every per-tag step inside the regex engine.
+_W = r"[ \t\n\r\f]"
+# a bare attribute value: printable ASCII but quotes, '=', '<', '>' and '`'
+_BARE = r"[!#-&(-;?-_a-~]"
+_ATTRS = (
+    rf"(?:{_W}++[a-zA-Z_:][-a-zA-Z0-9_:.]*+"
+    rf"""(?:{_W}*+={_W}*+(?:"[^"<>]*+"|'[^'<>]*+'|{_BARE}++))?)*+{_W}*+"""
 )
-_ATTR_RE = re.compile(
-    r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*(\"[^\"]*\"|'[^']*'|[^\s\"'=<>`]+))?"
+# names a tag-level alternative must not take: the structure, and elements
+# whose content html.parser may read as raw text
+_EXCL = (
+    r"(?i:table|t[rdh]|script|style|textarea|title|xmp|iframe|noembed|noframes"
+    r"|noscript|plaintext)(?![a-zA-Z0-9])"
 )
-_NEEDS_SLOW = ("<!", "<?")
-_UNMATCHED_LT_RE = re.compile(r"<[a-zA-Z/]")
+# any other start or end tag, <br> included; html.parser ignores an end
+# tag's attributes
+_IGN = rf"</?(?!{_EXCL})[a-zA-Z][a-zA-Z0-9]*+{_ATTRS}/?>"
+_LT = r"<(?![a-zA-Z/!?])"  # html.parser reads it as text
+_T = r"[^<]*+"
+
+
+def _seq(*tokens: str) -> str:
+    return rf"{_T}(?:(?:{'|'.join(tokens)}){_T})*+"
+
+
+_CELL = rf"<(?i:t[dh]){_ATTRS}>{_seq(_IGN, _LT)}</(?i:t[dh]){_W}*+>"
+_ROW = rf"<(?i:tr){_ATTRS}>{_seq(_CELL, _IGN, _LT)}</(?i:tr){_W}*+>"
+_TABLE = rf"<(?i:table){_ATTRS}>{_seq(_ROW, _IGN, _LT)}</(?i:table){_W}*+>"
+_PAYLOAD_RE = re.compile(_seq(_TABLE, _IGN, _LT), re.A)
+# On a payload _PAYLOAD_RE matched, a '<' always opens a well-formed tag or
+# is a bare '<', no quoted value holds '>', rows and cells occur only inside
+# tables and rows, and a cell's first closing tag ends it. So one findall
+# yields, in document order, each table start, each row start and each cell
+# with its attribute text and inner markup.
+_STRUCTURE_FIND = re.compile(
+    rf"<(?i:(table)|(tr))(?![a-zA-Z0-9])[^>]*>"
+    rf"|<(?i:t[dh])(?![a-zA-Z0-9])([^>]*)>(.*?)</(?i:t[dh]){_W}*>",
+    re.A | re.S,
+)
+_SPAN_ATTR_FIND = re.compile(
+    rf"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)(?:{_W}*={_W}*("[^"]*"|'[^']*'|[^ \t\n\r\f>]+))?""", re.A
+)
+_INNER_TAG_FIND = re.compile(r"<(/?)([a-zA-Z][a-zA-Z0-9]*)[^>]*>", re.A)
 
 
 class _FastFallback(Exception):
-    """Fast scanner met a construct only HTMLParser models; replay slow."""
+    """The payload is outside the scanner's grammar; use _TableParser."""
+
+
+def _cell_spans(attrs: str) -> tuple[int, int]:
+    """(colspan, rowspan) from a cell's attribute text, as _TableParser reads
+    them: names are case-blind, the last of a repeated name wins, and a
+    non-empty value is entity-decoded."""
+    cs = rs = 1
+    for name, v in _SPAN_ATTR_FIND.findall(attrs):
+        name = name.lower()
+        if name != "colspan" and name != "rowspan":
+            continue
+        if not v:
+            v = None
+        else:
+            if v[0] in "\"'":
+                v = v[1:-1]
+            if "&" in v:
+                v = unescape(v)
+        if name == "colspan":
+            cs = _span_val(v)
+        else:
+            rs = _span_val(v)
+    return cs, rs
+
+
+def _cell_text(content: str) -> str | None:
+    """A cell's value from its inner markup, as _TableParser assembles it:
+    each text run between tags is entity-decoded on its own, <br> breaks the
+    line and other tags are dropped."""
+    if "<" not in content:
+        if "&" in content:
+            content = unescape(content)
+        return " ".join(content.split()) or None
+    parts: list = []
+    pos = 0
+    for m in _INNER_TAG_FIND.finditer(content):
+        if m.start() > pos:
+            parts.append(unescape(content[pos : m.start()]))
+        if not m.group(1) and m.group(2).lower() == "br":
+            parts.append(_BR)
+        pos = m.end()
+    parts.append(unescape(content[pos:]))
+    return _assemble_value(parts)
 
 
 def _feed_fast(parser: "_TableParser", html: str) -> None:
-    """One regex pass with the _TableParser state machine INLINED into local
-    variables — the per-tag handler method dispatch was the dominant
-    remaining cost of the UDF hot path. Semantics are identical to driving
-    parser.handle_* per match: same fallback triggers, same state
-    transitions, same completed tables. Results land in parser.tables only
-    at the very end, so an aborted pass leaves the caller's fresh-parser
-    replay untouched (data outside an open cell is discarded unexamined,
-    exactly as handle_data would)."""
-    tables: list = []
-    depth = 0
-    rows = row = cell_parts = None
-    colspan = rowspan = 1
-    pos = 0
-    for m in _FAST_TAG_RE.finditer(html):
-        start = m.start()
-        if start > pos:
-            data = html[pos:start]
-            if "<" in data and _UNMATCHED_LT_RE.search(data):
-                raise _FastFallback
-            if cell_parts is not None and depth == 1:
-                if "&" in data:
-                    data = unescape(data)
-                cell_parts.append(data)
-        pos = m.end()
-        closing, name, attrtext, selfclose = m.groups()
-        name = name.lower()
-        if name == "script" or name == "style":
-            # HTMLParser switches to CDATA mode here (raw content up to the
-            # matching end tag); the regex scanner cannot
-            raise _FastFallback
-        if closing:
-            if depth != 1:
-                if name == "table" and depth > 0:
-                    depth -= 1
-            elif name == "td" or name == "th":
-                if cell_parts is not None:
-                    value = _assemble_value(cell_parts)
-                    if row is None:
-                        row = []
-                    row.append((value, colspan, rowspan))
-                    cell_parts = None
-            elif name == "tr":
-                if row is not None:
-                    rows.append(row)
-                    row = None
-            elif name == "table":
-                if rows is not None:
-                    tables.append(rows)
-                    rows = None
-                depth = 0
-            continue
-        # start tag
-        if depth == 1:
-            if name == "td" or name == "th":
-                cs = rs = 1
-                if attrtext:
-                    for am in _ATTR_RE.finditer(attrtext):
-                        k = am.group(1).lower()
-                        if k == "colspan" or k == "rowspan":
-                            v = am.group(2)
-                            if v is not None:
-                                if v[0] in "\"'":
-                                    v = v[1:-1]
-                                if "&" in v:
-                                    v = unescape(v)
-                            if k == "colspan":
-                                cs = _span_val(v)
-                            else:
-                                rs = _span_val(v)
-                colspan = cs
-                rowspan = rs
-                cell_parts = []
-            elif name == "tr":
-                row = []
-            elif name == "br":
-                if cell_parts is not None:
-                    cell_parts.append(_BR)
-            elif name == "table":
-                depth = 2
-        elif name == "table":
-            depth += 1
-            if depth == 1:
-                rows = []
-        if selfclose and (
-            name == "td" or name == "th" or name == "tr" or name == "table"
-        ):
-            # replay the end-tag transition for self-closed structural tags
-            if depth != 1:
-                if name == "table" and depth > 0:
-                    depth -= 1
-            elif name == "td" or name == "th":
-                if cell_parts is not None:
-                    value = _assemble_value(cell_parts)
-                    if row is None:
-                        row = []
-                    row.append((value, colspan, rowspan))
-                    cell_parts = None
-            elif name == "tr":
-                if row is not None:
-                    rows.append(row)
-                    row = None
-            elif name == "table":
-                if rows is not None:
-                    tables.append(rows)
-                    rows = None
-                depth = 0
-    if pos < len(html):
-        data = html[pos:]
-        if "<" in data and _UNMATCHED_LT_RE.search(data):
-            raise _FastFallback
-    parser.tables.extend(tables)
+    """Fill ``parser.tables`` as ``parser.feed(html)`` would, or raise
+    _FastFallback (leaving the parser untouched) when the payload is outside
+    the grammar."""
+    if _PAYLOAD_RE.fullmatch(html) is None:
+        raise _FastFallback
+    tables = parser.tables
+    for table, tr, attrs, content in _STRUCTURE_FIND.findall(html):
+        if table:
+            rows = []
+            tables.append(rows)
+        elif tr:
+            row = []
+            rows.append(row)
+        elif attrs:
+            row.append((_cell_text(content), *_cell_spans(attrs)))
+        else:
+            row.append((_cell_text(content), 1, 1))
+
+
+def _raw_tables(html: str) -> list:
+    parser = _TableParser()
+    try:
+        _feed_fast(parser, html)
+    except _FastFallback:
+        parser.feed(html)
+        parser.close()
+    return parser.tables
+
+
+# ------------------------------------------------------------------- grids
+
+#: Most grid positions one HTML payload may have, over all its tables. Spans
+#: let a few bytes ask for millions of positions (every position becomes an
+#: output cell), so the grid builder refuses more than this.
+MAX_GRID_POSITIONS = 100_000
+
+
+class HtmlGrid(NamedTuple):
+    """One parsed HTML table as a row-major grid of ``n_rows * n_cols``
+    positions: ``values[i]`` is the text of the cell covering position ``i``
+    (None for padding), and ``spans`` holds the (top row, left col, bottom
+    row, right col) of each cell that covers more than one position. Every
+    other position is a cell of its own."""
+
+    n_rows: int
+    n_cols: int
+    values: list
+    spans: list
+
+
+_FREE = object()  # a grid position no cell covers (yet)
+
+
+def _build_grid(raw_rows: list, budget: int) -> HtmlGrid | None:
+    """Lay a table's cells out on the grid, as the HTML table model does: a
+    cell takes the first free column of its row at or after the previous
+    cell's end and covers colspan x rowspan positions. Positions no cell
+    covers are padding; empty rows at the end are dropped. Raises ValueError
+    when two cells would cover one position (the HTML standard's table-model
+    error) or the grid would pass ``budget`` positions."""
+    lines: list[list] = [[] for _ in raw_rows]  # lines[r][c]: value covering (r, c), or _FREE
+    spans = []
+    n_rows = n_cols = 0
+    for r, raw_row in enumerate(raw_rows):
+        line = lines[r]
+        c = 0
+        for value, colspan, rowspan in raw_row:
+            while c < len(line) and line[c] is not _FREE:
+                c += 1
+            r2 = r + rowspan
+            c2 = c + colspan
+            if r2 > n_rows:
+                n_rows = r2
+            if c2 > n_cols:
+                n_cols = c2
+            if n_rows * n_cols > budget:
+                raise ValueError(
+                    f"HTML tables need more than {MAX_GRID_POSITIONS} grid positions"
+                )
+            if r2 > len(lines):  # a rowspan past the last row
+                lines += [[] for _ in range(r2 - len(lines))]
+            if colspan > 1 or rowspan > 1:
+                spans.append((r, c, r2 - 1, c2 - 1))
+            for rr in range(r, r2):
+                covered = lines[rr]
+                n = len(covered)
+                if n < c:
+                    covered += [_FREE] * (c - n)
+                elif n > c and covered[c:c2].count(_FREE) != min(n, c2) - c:
+                    raise ValueError(f"HTML table cells overlap in row {rr}")
+                covered[c:c2] = [value] * colspan
+            c = c2
+    if n_rows == 0:
+        return None
+    values = []
+    for line in lines[:n_rows]:
+        values += line
+        values += [_FREE] * (n_cols - len(line))
+    return HtmlGrid(n_rows, n_cols, [None if v is _FREE else v for v in values], spans)
+
+
+def html_grids(html: str) -> list[HtmlGrid]:
+    """Every top-level ``<table>`` of an HTML payload that has a position,
+    as a grid. Raises ValueError when the tables together need more than
+    MAX_GRID_POSITIONS positions."""
+    grids = []
+    budget = MAX_GRID_POSITIONS
+    for raw_rows in _raw_tables(html):
+        g = _build_grid(raw_rows, budget)
+        if g is not None:
+            grids.append(g)
+            budget -= g.n_rows * g.n_cols
+    return grids
+
+
+def grid_columns(g: HtmlGrid) -> tuple[list, ...]:
+    """Per position, row-major: the (row, col, x1, y1, x2, y2, value) cell
+    columns of ``table_to_record``, where x/y are the covering cell's
+    synthetic box."""
+    n_rows, n_cols = g.n_rows, g.n_cols
+    # sorted(list(range(n)) * k) repeats each of 0..n-1 k times, in order
+    rows = sorted(list(range(n_rows)) * n_cols)
+    cols = list(range(n_cols)) * n_rows
+    x1 = list(range(0, n_cols * HTML_COL_W, HTML_COL_W)) * n_rows
+    y1 = sorted(list(range(0, n_rows * HTML_ROW_H, HTML_ROW_H)) * n_cols)
+    x2 = list(range(HTML_COL_W, (n_cols + 1) * HTML_COL_W, HTML_COL_W)) * n_rows
+    y2 = sorted(list(range(HTML_ROW_H, (n_rows + 1) * HTML_ROW_H, HTML_ROW_H)) * n_cols)
+    for r1, c1, r2, c2 in g.spans:  # every position of a span gets its box
+        k = c2 - c1 + 1
+        for r in range(r1, r2 + 1):
+            i = r * n_cols + c1
+            x1[i : i + k] = [c1 * HTML_COL_W] * k
+            y1[i : i + k] = [r1 * HTML_ROW_H] * k
+            x2[i : i + k] = [(c2 + 1) * HTML_COL_W] * k
+            y2[i : i + k] = [(r2 + 1) * HTML_ROW_H] * k
+    return rows, cols, x1, y1, x2, y2, g.values
+
+
+def grid_html(g: HtmlGrid) -> str:
+    """``table_to_html`` of the grid's Table: one ``<td>`` per position,
+    except that a span is written as one piece at its top-left position or,
+    when it covers more than one row and column, split along its longer
+    side (columns when square) into pieces at the top of each column or the
+    left of each row."""
+    n_cols = g.n_cols
+    vals = ["" if v is None else v for v in g.values]
+    pieces = [f'<td colspan="1" rowspan="1">{v}</td>' for v in vals]
+    for r1, c1, r2, c2 in g.spans:
+        cs = c2 - c1 + 1
+        rs = r2 - r1 + 1
+        val = vals[r1 * n_cols + c1]
+        for r in range(r1, r2 + 1):
+            pieces[r * n_cols + c1 : r * n_cols + c2 + 1] = [""] * cs
+        if cs > rs > 1:  # one piece per row
+            for r in range(r1, r2 + 1):
+                pieces[r * n_cols + c1] = f'<td colspan="{cs}" rowspan="1">{val}</td>'
+        elif cs > 1 and rs > 1:  # one piece per column
+            for c in range(c1, c2 + 1):
+                pieces[r1 * n_cols + c] = f'<td colspan="1" rowspan="{rs}">{val}</td>'
+        else:
+            pieces[r1 * n_cols + c1] = f'<td colspan="{cs}" rowspan="{rs}">{val}</td>'
+    html = "".join(
+        ["<table>"]
+        + ["<tr>" + "".join(pieces[i : i + n_cols]) + "</tr>" for i in range(0, len(pieces), n_cols)]
+        + ["</table>"]
+    )
+    # a value holds "\n" only where a <br> broke its lines, and no tag holds
+    # one: the per-value replace of table_to_html, done once
+    return html.replace("\n", "<br>")
+
+
+def _grid_table(g: HtmlGrid) -> Table:
+    _rows, _cols, x1, y1, x2, y2, values = grid_columns(g)
+    cells = [Cell(*box) for box in zip(x1, y1, x2, y2, values)]
+    for r1, c1, r2, c2 in g.spans:  # one Cell object over all its positions
+        top_left = cells[r1 * g.n_cols + c1]
+        for r in range(r1, r2 + 1):
+            cells[r * g.n_cols + c1 : r * g.n_cols + c2 + 1] = [top_left] * (c2 - c1 + 1)
+    return Table(rows=[cells[i : i + g.n_cols] for i in range(0, len(cells), g.n_cols)])
 
 
 def parse_html_tables(html: str) -> list[Table]:
@@ -365,85 +520,4 @@ def parse_html_tables(html: str) -> list[Table]:
     all covered grid positions. Geometry is synthetic
     (col width 100, row height 20) since HTML has no pixel space.
     """
-    parser = _TableParser()
-    if any(tok in html for tok in _NEEDS_SLOW):
-        parser.feed(html)
-        parser.close()
-    else:
-        try:
-            _feed_fast(parser, html)
-        except _FastFallback:
-            # the aborted fast pass mutated parser state — replay fresh
-            parser = _TableParser()
-            parser.feed(html)
-            parser.close()
-
-    out: list[Table] = []
-    for raw_rows in parser.tables:
-        if not raw_rows:
-            continue
-        # Fast path: every cell is 1×1 (no colspan/rowspan) — the occupied/
-        # pending bookkeeping below degenerates to "cell c of raw row r sits
-        # at grid (r, c)". Replicates the general path exactly: trailing
-        # all-empty raw rows are dropped (they contribute no occupied
-        # position), interior empty rows become filler rows, short rows are
-        # right-padded with None-content filler cells.
-        if all(cs == 1 and rs == 1 for raw_row in raw_rows for (_v, cs, rs) in raw_row):
-            n_rows = len(raw_rows)
-            while n_rows and not raw_rows[n_rows - 1]:
-                n_rows -= 1
-            if n_rows == 0:
-                continue
-            n_cols = max(len(raw_row) for raw_row in raw_rows[:n_rows])
-            rows = []
-            for r in range(n_rows):
-                raw_row = raw_rows[r]
-                y1 = r * HTML_ROW_H
-                y2 = y1 + HTML_ROW_H
-                row = [
-                    Cell(c * HTML_COL_W, y1, (c + 1) * HTML_COL_W, y2, content=v)
-                    for c, (v, _cs, _rs) in enumerate(raw_row)
-                ]
-                for c in range(len(raw_row), n_cols):
-                    row.append(Cell(c * HTML_COL_W, y1, (c + 1) * HTML_COL_W, y2, None))
-                rows.append(row)
-            out.append(Table(rows=rows))
-            continue
-        occupied: dict[tuple[int, int], Cell] = {}
-        pending: dict[Cell, tuple[int, int, int, int]] = {}  # cell -> (r1, c1, r2, c2)
-        for r, raw_row in enumerate(raw_rows):
-            c = 0
-            for value, colspan, rowspan in raw_row:
-                while (r, c) in occupied:
-                    c += 1
-                cell = Cell(0, 0, 0, 0, content=value)
-                r2 = r + rowspan - 1
-                c2 = c + colspan - 1
-                pending[cell] = (r, c, r2, c2)
-                for rr in range(r, r2 + 1):
-                    for cc in range(c, c2 + 1):
-                        occupied[(rr, cc)] = cell
-                c = c2 + 1
-        if not occupied:
-            continue
-        n_rows = max(rc[0] for rc in occupied) + 1
-        n_cols = max(rc[1] for rc in occupied) + 1
-        # Assign synthetic geometry now that span extents are known.
-        for cell, (r1, c1, r2, c2) in pending.items():
-            cell.x1 = c1 * HTML_COL_W
-            cell.y1 = r1 * HTML_ROW_H
-            cell.x2 = (c2 + 1) * HTML_COL_W
-            cell.y2 = (r2 + 1) * HTML_ROW_H
-        rows: list[list[Cell]] = []
-        for r in range(n_rows):
-            row: list[Cell] = []
-            for c in range(n_cols):
-                cell = occupied.get((r, c))
-                if cell is None:
-                    cell = Cell(
-                        c * HTML_COL_W, r * HTML_ROW_H, (c + 1) * HTML_COL_W, (r + 1) * HTML_ROW_H, None
-                    )
-                row.append(cell)
-            rows.append(row)
-        out.append(Table(rows=rows))
-    return out
+    return [_grid_table(g) for g in html_grids(html)]

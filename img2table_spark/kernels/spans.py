@@ -60,6 +60,10 @@ def create_all_rectangles(positions: list[tuple[int, int]], value: str | None) -
     max_col = max(p[1] for p in positions)
     min_row = min(p[0] for p in positions)
     max_row = max(p[0] for p in positions)
+    if len(pos_set) == (max_row - min_row + 1) * (max_col - min_col + 1):
+        # a full rectangle (any merged cell of a well-formed table) is its
+        # own largest covered rectangle: skip the O(n^6) search
+        return [CellSpan(min_row, max_row, min_col, max_col, value)]
 
     largest_area = 0
     best_span: CellSpan | None = None

@@ -1,19 +1,24 @@
 """The extraction operator: transcript rows → extracted-table rows.
 
 Spark-first design (SURVEY.md §3.4): the whole reference pipeline is the body
-of ONE Arrow-batched ``mapInPandas`` UDF. Payloads are turn-local, so no
+of ONE Arrow-batched ``mapInArrow`` function. Payloads are turn-local, so no
 geometry ever crosses the Spark boundary; the only shuffle in the job is the
 optional salted repartition that defuses long-conversation skew.
 
 Payload dispatch by the ``tool`` column (FIXTURES.md §1):
-  - text/html        → HTML-table grammar parser (kernels.html_io)
+  - text/html        → table scanner and grid builder (kernels.html_io); the
+                       grids go straight into the output columns
   - image/*          → decode + bordered/borderless CV pipeline
-                       (kernels.image — pure NumPy; PNG via stdlib zlib)
-  - application/pdf  → native-text path (kernels.pdf) when available
+                       (kernels.image_doc — pure NumPy; PNG via stdlib zlib)
+  - application/pdf  → native-text or rasterized path (kernels.pdf_doc)
   - text/plain, null → no tables (negative payload)
 
-Malformed payloads never fail the job: the UDF emits zero rows and the
-per-partition manifest records the error count (FIXTURES.md §6).
+Image and PDF payloads become ``Table`` objects (``extract_payload``) that
+are then written into the same columns.
+
+Malformed payloads never fail the job: the function emits zero rows (or one
+error marker with ``emit_errors``) and the per-partition manifest records
+the error count (FIXTURES.md §6).
 """
 
 from __future__ import annotations
@@ -23,7 +28,15 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from img2table_spark.kernels.html_io import parse_html_tables, table_to_html
+from img2table_spark.kernels.html_io import (
+    HTML_COL_W,
+    HTML_ROW_H,
+    grid_columns,
+    grid_html,
+    html_grids,
+    parse_html_tables,
+    table_to_html,
+)
 from img2table_spark.kernels.objects import Table
 from img2table_spark.kernels.text import is_relevant_table, table_to_record
 from img2table_spark.schema import EXTRACTED_SCHEMA
@@ -111,7 +124,8 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
     children for ``cells``). The pandas path paid a per-cell dict build plus
     pandas→Arrow conversion of the nested column — measured ~35% of the
     per-turn cost at full throughput (guide §4.2: construct Arrow arrays
-    directly instead of row-by-row objects)."""
+    directly instead of row-by-row objects). HTML payloads build no Table
+    at all: their grids (``html_grids``) are appended as they are."""
     import pyarrow as pa
 
     cell_t = pa.struct(
@@ -145,12 +159,9 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
     def _batch_extract(batches):
         for b in batches:
             names = b.schema.names
-            conv_in = b.column(names.index("conv_id")).to_pylist()
-            turn_in = b.column(names.index("turn_idx")).to_pylist()
             text_in = b.column(names.index("text")).to_pylist()
             tool_in = b.column(names.index("tool")).to_pylist()
-            conv: list = []
-            turn: list = []
+            src: list = []  # input row of each output row
             tidx: list = []
             bx1: list = []
             by1: list = []
@@ -168,17 +179,20 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
             c_x2: list = []
             c_y2: list = []
             c_val: list = []
-            for conv_id, turn_idx, text, tool in zip(
-                conv_in, turn_in, text_in, tool_in
-            ):
+            for k, (text, tool) in enumerate(zip(text_in, tool_in)):
                 try:
-                    tables = [
-                        t for t in extract_payload(text, tool) if is_relevant_table(t)
-                    ]
+                    if text is not None and (tool or "").lower() in _HTML_TOOLS:
+                        # is_relevant_table for a bordered table
+                        grids = [g for g in html_grids(text) if g.n_rows > 1 or g.n_cols > 1]
+                        tables = ()
+                    else:
+                        grids = ()
+                        tables = [
+                            t for t in extract_payload(text, tool) if is_relevant_table(t)
+                        ]
                 except Exception as exc:
                     if emit_errors:
-                        conv.append(conv_id)
-                        turn.append(turn_idx)
+                        src.append(k)
                         tidx.append(-1)
                         bx1.append(None)
                         by1.append(None)
@@ -190,6 +204,28 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
                         ncols.append(0)
                         offsets.append(offsets[-1])
                     continue
+                for i, g in enumerate(grids):
+                    # table_to_record of the grid's Table
+                    n_r, n_c = g.n_rows, g.n_cols
+                    g_row, g_col, g_x1, g_y1, g_x2, g_y2, g_val = grid_columns(g)
+                    c_row.extend(g_row)
+                    c_col.extend(g_col)
+                    c_x1.extend(g_x1)
+                    c_y1.extend(g_y1)
+                    c_x2.extend(g_x2)
+                    c_y2.extend(g_y2)
+                    c_val.extend(g_val)
+                    src.append(k)
+                    tidx.append(i)
+                    bx1.append(0)
+                    by1.append(0)
+                    bx2.append(n_c * HTML_COL_W)
+                    by2.append(n_r * HTML_ROW_H)
+                    titles.append(None)
+                    htmls.append(grid_html(g))
+                    nrows.append(n_r)
+                    ncols.append(n_c)
+                    offsets.append(offsets[-1] + n_r * n_c)
                 for i, t in enumerate(tables):
                     # inlined table_to_record, appending straight into the
                     # column builders (same values, no per-cell dicts)
@@ -219,8 +255,7 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
                                     y2 = cy2
                     if t.rows and n_cells == 0:  # rows of zero width
                         raise ValueError("min() arg is an empty sequence")
-                    conv.append(conv_id)
-                    turn.append(turn_idx)
+                    src.append(k)
                     tidx.append(i)
                     bx1.append(x1)
                     by1.append(y1)
@@ -246,10 +281,11 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
                     fields=list(cell_t),
                 ),
             )
+            src_ix = pa.array(src, pa.int32())
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(conv, pa.string()),
-                    pa.array(turn, pa.int32()),
+                    b.column(names.index("conv_id")).take(src_ix).cast(pa.string()),
+                    b.column(names.index("turn_idx")).take(src_ix).cast(pa.int32()),
                     pa.array(tidx, pa.int32()),
                     pa.array(bx1, pa.int32()),
                     pa.array(by1, pa.int32()),
