@@ -47,9 +47,10 @@ _POOL = None
 
 
 def _kernel_threads() -> int:
-    env = os.environ.get("IMG2TABLE_KERNEL_THREADS")
-    if env:
-        return max(1, int(env))
+    try:
+        return max(1, int(os.environ["IMG2TABLE_KERNEL_THREADS"]))
+    except (KeyError, ValueError):  # unset or not a number: the affinity default
+        pass
     try:
         n = len(os.sched_getaffinity(0))
     except AttributeError:  # non-Linux

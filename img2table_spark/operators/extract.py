@@ -23,9 +23,6 @@ the error count (FIXTURES.md §6).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from img2table_spark.kernels.html_io import (
@@ -38,7 +35,7 @@ from img2table_spark.kernels.html_io import (
     table_to_html,
 )
 from img2table_spark.kernels.objects import Table
-from img2table_spark.kernels.text import is_relevant_table, table_to_record
+from img2table_spark.kernels.text import is_relevant_table, table_columns
 from img2table_spark.schema import EXTRACTED_SCHEMA
 
 _HTML_TOOLS = {"text/html", "html"}
@@ -69,63 +66,28 @@ def extract_payload(text: str | None, tool: str | None) -> list[Table]:
     return []
 
 
-def _make_batch_extract(emit_errors: bool = False):
-    def _batch_extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = EXTRACTED_SCHEMA.fieldNames()
-        for pdf in batches:
-            rows: list[dict] = []
-            # .tolist() once per batch: plain-python iteration is measurably
-            # cheaper than pandas Series iteration in this hot loop.
-            for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"].tolist(),
-                pdf["turn_idx"].tolist(),
-                pdf["text"].tolist(),
-                pdf["tool"].tolist(),
-            ):
-                try:
-                    tables = [t for t in extract_payload(text, tool) if is_relevant_table(t)]
-                except Exception as exc:
-                    # error-tolerant UDF: malformed payload → zero output rows;
-                    # optionally an error-marker row (table_idx = -1) that the
-                    # pipeline counts into the partition manifest then drops.
-                    if emit_errors:
-                        rows.append(
-                            {
-                                "conv_id": conv_id,
-                                "turn_idx": int(turn_idx),
-                                "table_idx": -1,
-                                "x1": None, "y1": None, "x2": None, "y2": None,
-                                "title": repr(exc)[:200],
-                                "cells": [],
-                                "html": None,
-                                "n_rows": 0,
-                                "n_cols": 0,
-                            }
-                        )
-                    continue
-                for i, t in enumerate(tables):
-                    rec = table_to_record(t)
-                    rec["conv_id"] = conv_id
-                    rec["turn_idx"] = int(turn_idx)
-                    rec["table_idx"] = i
-                    rec["html"] = table_to_html(t)
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: pd.Series(dtype="object") for c in cols}
-            )
+def _grid_out(g) -> tuple:
+    """An HTML grid's output: cell columns, box, title, html, n_rows, n_cols
+    (those of ``table_to_record``/``table_to_html`` of the grid's Table)."""
+    n_r, n_c = g.n_rows, g.n_cols
+    return grid_columns(g), (0, 0, n_c * HTML_COL_W, n_r * HTML_ROW_H), None, grid_html(g), n_r, n_c
 
-    return _batch_extract
+
+def _table_out(t: Table) -> tuple:
+    """A Table's output: cell columns, box, title, html, n_rows, n_cols."""
+    columns, box = table_columns(t)
+    return columns, box, t.title, table_to_html(t), t.nb_rows, t.nb_columns
 
 
 def _make_batch_extract_arrow(emit_errors: bool = False):
-    """Arrow-native batch extractor (mapInArrow): identical row semantics to
-    _make_batch_extract, but the output batch is assembled as flat Python
-    lists converted once per batch into Arrow arrays (offsets + struct
-    children for ``cells``). The pandas path paid a per-cell dict build plus
-    pandas→Arrow conversion of the nested column — measured ~35% of the
-    per-turn cost at full throughput (guide §4.2: construct Arrow arrays
-    directly instead of row-by-row objects). HTML payloads build no Table
-    at all: their grids (``html_grids``) are appended as they are."""
+    """The mapInArrow batch extractor: one output row per relevant table of
+    each turn, or, with ``emit_errors``, one marker row (``table_idx`` -1,
+    the error in ``title``) per turn whose payload raised. The output batch
+    is assembled as flat Python lists converted once per batch into Arrow
+    arrays (offsets + struct children for ``cells``), with no per-cell
+    objects (guide §4.2: construct Arrow arrays directly instead of
+    row-by-row objects). HTML payloads build no Table at all: their grids
+    (``html_grids``) are appended as they are."""
     import pyarrow as pa
 
     cell_t = pa.struct(
@@ -155,147 +117,60 @@ def _make_batch_extract_arrow(emit_errors: bool = False):
             pa.field("n_cols", pa.int32()),
         ]
     )
+    # types of the per-table columns built from Python values
+    scalar_t = [f.type for f in out_schema if f.name not in ("conv_id", "turn_idx", "cells")]
 
     def _batch_extract(batches):
         for b in batches:
             names = b.schema.names
             text_in = b.column(names.index("text")).to_pylist()
             tool_in = b.column(names.index("tool")).to_pylist()
-            src: list = []  # input row of each output row
-            tidx: list = []
-            bx1: list = []
-            by1: list = []
-            bx2: list = []
-            by2: list = []
-            titles: list = []
-            htmls: list = []
-            nrows: list = []
-            ncols: list = []
-            offsets: list = [0]
-            c_row: list = []
-            c_col: list = []
-            c_x1: list = []
-            c_y1: list = []
-            c_x2: list = []
-            c_y2: list = []
-            c_val: list = []
+            # per output row: (input row, table_idx, x1, y1, x2, y2, title,
+            # html, n_rows, n_cols, end offset of its cells)
+            out: list = []
+            # the children of the cells struct, in its field order
+            cells = c_row, c_col, c_x1, c_y1, c_x2, c_y2, c_val = ([], [], [], [], [], [], [])
             for k, (text, tool) in enumerate(zip(text_in, tool_in)):
                 try:
                     if text is not None and (tool or "").lower() in _HTML_TOOLS:
                         # is_relevant_table for a bordered table
-                        grids = [g for g in html_grids(text) if g.n_rows > 1 or g.n_cols > 1]
-                        tables = ()
+                        found = [g for g in html_grids(text) if g.n_rows > 1 or g.n_cols > 1]
+                        serialize = _grid_out
                     else:
-                        grids = ()
-                        tables = [
-                            t for t in extract_payload(text, tool) if is_relevant_table(t)
-                        ]
+                        found = [t for t in extract_payload(text, tool) if is_relevant_table(t)]
+                        serialize = _table_out
                 except Exception as exc:
                     if emit_errors:
-                        src.append(k)
-                        tidx.append(-1)
-                        bx1.append(None)
-                        by1.append(None)
-                        bx2.append(None)
-                        by2.append(None)
-                        titles.append(repr(exc)[:200])
-                        htmls.append(None)
-                        nrows.append(0)
-                        ncols.append(0)
-                        offsets.append(offsets[-1])
+                        out.append((k, -1, None, None, None, None, repr(exc)[:200], None, 0, 0, len(c_row)))
                     continue
-                for i, g in enumerate(grids):
-                    # table_to_record of the grid's Table
-                    n_r, n_c = g.n_rows, g.n_cols
-                    g_row, g_col, g_x1, g_y1, g_x2, g_y2, g_val = grid_columns(g)
-                    c_row.extend(g_row)
-                    c_col.extend(g_col)
-                    c_x1.extend(g_x1)
-                    c_y1.extend(g_y1)
-                    c_x2.extend(g_x2)
-                    c_y2.extend(g_y2)
-                    c_val.extend(g_val)
-                    src.append(k)
-                    tidx.append(i)
-                    bx1.append(0)
-                    by1.append(0)
-                    bx2.append(n_c * HTML_COL_W)
-                    by2.append(n_r * HTML_ROW_H)
-                    titles.append(None)
-                    htmls.append(grid_html(g))
-                    nrows.append(n_r)
-                    ncols.append(n_c)
-                    offsets.append(offsets[-1] + n_r * n_c)
-                for i, t in enumerate(tables):
-                    # inlined table_to_record, appending straight into the
-                    # column builders (same values, no per-cell dicts)
-                    x1 = y1 = x2 = y2 = None
-                    n_cells = 0
-                    for r, row in enumerate(t.rows):
-                        for c, cell in enumerate(row):
-                            cx1, cy1, cx2, cy2 = cell.x1, cell.y1, cell.x2, cell.y2
-                            c_row.append(r)
-                            c_col.append(c)
-                            c_x1.append(cx1)
-                            c_y1.append(cy1)
-                            c_x2.append(cx2)
-                            c_y2.append(cy2)
-                            c_val.append(cell.content)
-                            n_cells += 1
-                            if x1 is None:
-                                x1, y1, x2, y2 = cx1, cy1, cx2, cy2
-                            else:
-                                if cx1 < x1:
-                                    x1 = cx1
-                                if cy1 < y1:
-                                    y1 = cy1
-                                if cx2 > x2:
-                                    x2 = cx2
-                                if cy2 > y2:
-                                    y2 = cy2
-                    if t.rows and n_cells == 0:  # rows of zero width
-                        raise ValueError("min() arg is an empty sequence")
-                    src.append(k)
-                    tidx.append(i)
-                    bx1.append(x1)
-                    by1.append(y1)
-                    bx2.append(x2)
-                    by2.append(y2)
-                    titles.append(t.title)
-                    htmls.append(table_to_html(t))
-                    nrows.append(t.nb_rows)
-                    ncols.append(t.nb_columns)
-                    offsets.append(offsets[-1] + n_cells)
+                # outside the try: a serializer error is a fault of the
+                # program, not of the payload, and fails the task
+                for i, item in enumerate(found):
+                    (t_row, t_col, t_x1, t_y1, t_x2, t_y2, t_val), box, title, html, n_r, n_c = serialize(item)
+                    c_row.extend(t_row)
+                    c_col.extend(t_col)
+                    c_x1.extend(t_x1)
+                    c_y1.extend(t_y1)
+                    c_x2.extend(t_x2)
+                    c_y2.extend(t_y2)
+                    c_val.extend(t_val)
+                    out.append((k, i, *box, title, html, n_r, n_c, len(c_row)))
+            src, *scalars, ends = zip(*out) if out else [()] * 11
             cells_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
+                pa.array([0, *ends], pa.int32()),
                 pa.StructArray.from_arrays(
-                    [
-                        pa.array(c_row, pa.int32()),
-                        pa.array(c_col, pa.int32()),
-                        pa.array(c_x1, pa.int32()),
-                        pa.array(c_y1, pa.int32()),
-                        pa.array(c_x2, pa.int32()),
-                        pa.array(c_y2, pa.int32()),
-                        pa.array(c_val, pa.string()),
-                    ],
-                    fields=list(cell_t),
+                    [pa.array(v, f.type) for v, f in zip(cells, cell_t)], fields=list(cell_t)
                 ),
             )
             src_ix = pa.array(src, pa.int32())
+            tidx, bx1, by1, bx2, by2, titles, htmls, nrows, ncols = (
+                pa.array(v, t) for v, t in zip(scalars, scalar_t)
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(names.index("conv_id")).take(src_ix).cast(pa.string()),
                     b.column(names.index("turn_idx")).take(src_ix).cast(pa.int32()),
-                    pa.array(tidx, pa.int32()),
-                    pa.array(bx1, pa.int32()),
-                    pa.array(by1, pa.int32()),
-                    pa.array(bx2, pa.int32()),
-                    pa.array(by2, pa.int32()),
-                    pa.array(titles, pa.string()),
-                    cells_arr,
-                    pa.array(htmls, pa.string()),
-                    pa.array(nrows, pa.int32()),
-                    pa.array(ncols, pa.int32()),
+                    tidx, bx1, by1, bx2, by2, titles, cells_arr, htmls, nrows, ncols,
                 ],
                 schema=out_schema,
             )

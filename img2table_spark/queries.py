@@ -14,9 +14,11 @@ Design rules for oracle parity:
 
 from __future__ import annotations
 
+import atexit as _atexit
 import functools as _functools
 import hashlib as _hashlib
 import math as _math
+import shutil as _shutil
 from pathlib import Path
 
 import pandas as pd  # noqa: F401 — pandas_udf type hints resolve at module scope
@@ -1654,7 +1656,16 @@ FROM read_parquet('{_Q14_GOLDEN}')
 """
 
 
-_Q14_DF_MEMO: dict = {}
+_Q14_DF_MEMO: dict = {}  # (applicationId,) -> (DataFrame, staging dir)
+
+
+def _q14_drop_staging() -> None:
+    """Forget every memoized q14 corpus and delete its staging dir."""
+    while _Q14_DF_MEMO:
+        _shutil.rmtree(_Q14_DF_MEMO.popitem()[1][1], ignore_errors=True)
+
+
+_atexit.register(_q14_drop_staging)
 
 
 def _q14_corpus_df(spark: SparkSession) -> DataFrame:
@@ -1667,20 +1678,20 @@ def _q14_corpus_df(spark: SparkSession) -> DataFrame:
     key = (spark.sparkContext.applicationId,)
     hit = _Q14_DF_MEMO.get(key)
     if hit is not None:
-        return hit
+        return hit[0]
     import tempfile
 
     from img2table_spark.schema import TRANSCRIPT_SCHEMA
 
-    path = tempfile.mkdtemp(prefix="q14_corpus_") + "/corpus"
+    _q14_drop_staging()  # an earlier session's corpus is read no more
+    staging = tempfile.mkdtemp(prefix="q14_corpus_")
+    path = staging + "/corpus"
     rows = list(_q14_corpus_rows())
     spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
     out = spark.read.parquet(path)
-    _Q14_DF_MEMO[key] = out
-    for stale in [k for k in _Q14_DF_MEMO if k != key]:
-        del _Q14_DF_MEMO[stale]
+    _Q14_DF_MEMO[key] = (out, staging)
     return out
 
 

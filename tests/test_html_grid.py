@@ -1,8 +1,9 @@
 """The HTML extraction path: the regex scanner against html.parser, the grid
 builder's limits, and the Arrow batch extractor against the reference path
 (``_TableParser`` → a position-by-position ``Table`` layout →
-``table_to_record``/``table_to_html``) and against the pandas extractor the
-streaming job runs."""
+``table_to_record``/``table_to_html``) and against the Table path
+(``extract_payload`` → ``is_relevant_table`` →
+``table_to_record``/``table_to_html``)."""
 
 import time
 from unittest import mock
@@ -15,7 +16,7 @@ from hypothesis import strategies as st
 import img2table_spark.kernels.html_io as H
 from img2table_spark.kernels.objects import Cell, Table
 from img2table_spark.kernels.text import is_relevant_table, table_to_record
-from img2table_spark.operators.extract import _make_batch_extract, _make_batch_extract_arrow
+from img2table_spark.operators.extract import _make_batch_extract_arrow, extract_payload
 from img2table_spark.sources.transcripts import golden_transcripts
 
 IN_SCHEMA = pa.schema(
@@ -67,25 +68,34 @@ def _reference_table(raw_rows):
     ])
 
 
+def _table_rows(batch, tables_of=extract_payload, emit_errors=True):
+    """The Table path: ``tables_of(text, tool)``, ``is_relevant_table``,
+    then ``table_to_record`` and ``table_to_html``."""
+    rows = []
+    for turn in batch.to_pylist():
+        key = {"conv_id": turn["conv_id"], "turn_idx": turn["turn_idx"]}
+        try:
+            tables = [t for t in tables_of(turn["text"], turn["tool"]) if is_relevant_table(t)]
+        except Exception as exc:
+            if emit_errors:
+                rows.append({
+                    **key, "table_idx": -1, "x1": None, "y1": None, "x2": None, "y2": None,
+                    "title": repr(exc)[:200], "cells": [], "html": None, "n_rows": 0, "n_cols": 0,
+                })
+            continue
+        for i, t in enumerate(tables):
+            rows.append({**key, "table_idx": i, **table_to_record(t), "html": H.table_to_html(t)})
+    return rows
+
+
 def _reference_rows(batch, emit_errors=True):
     """html.parser alone, the reference layout, then the Table path."""
-    rows = []
+
+    def tables_of(text, _tool):
+        return [t for t in map(_reference_table, H._raw_tables(text)) if t is not None]
+
     with mock.patch.object(H, "_feed_fast", _force_slow):
-        for turn in batch.to_pylist():
-            key = {"conv_id": turn["conv_id"], "turn_idx": turn["turn_idx"]}
-            try:
-                tables = [_reference_table(raw) for raw in H._raw_tables(turn["text"])]
-                tables = [t for t in tables if t is not None and is_relevant_table(t)]
-            except Exception as exc:
-                if emit_errors:
-                    rows.append({
-                        **key, "table_idx": -1, "x1": None, "y1": None, "x2": None, "y2": None,
-                        "title": repr(exc)[:200], "cells": [], "html": None, "n_rows": 0, "n_cols": 0,
-                    })
-                continue
-            for i, t in enumerate(tables):
-                rows.append({**key, "table_idx": i, **table_to_record(t), "html": H.table_to_html(t)})
-    return rows
+        return _table_rows(batch, tables_of, emit_errors)
 
 
 def _falls_back(html):
@@ -242,7 +252,7 @@ SPAN_CASES = [
 def test_span_payload_cost_is_bounded(html):
     for run in (
         lambda: _arrow_rows(_batch([html])),
-        lambda: list(_make_batch_extract(True)(iter([_batch([html]).to_pandas()]))),
+        lambda: _table_rows(_batch([html])),
     ):
         t0 = time.perf_counter()
         run()
@@ -292,19 +302,19 @@ def test_many_tables_at_the_cap_cost_one_payload():
         assert time.perf_counter() - t0 < 1.0
         assert len(rows) == n_rows
         t0 = time.perf_counter()
-        [out] = _make_batch_extract(emit_errors)(iter([batch.to_pandas()]))
+        out = _table_rows(batch, emit_errors=emit_errors)
         assert time.perf_counter() - t0 < 1.0
         assert len(out) == n_rows
     assert rows[0]["table_idx"] == -1 and "grid positions" in rows[0]["title"]
 
 
-# ------------------------------------------------- batch ≡ streaming path
+# ------------------------------------------------- grids ≡ Tables
 
 @pytest.mark.parametrize("emit_errors", [False, True])
-def test_arrow_and_pandas_extractors_agree(emit_errors):
-    """The mapInArrow extractor (batch job) and the pandas extractor
-    (streaming job) give the same rows on the golden transcripts and the
-    span cases."""
+def test_arrow_extractor_and_table_path_agree(emit_errors):
+    """The mapInArrow extractor, which writes HTML grids without building
+    Tables, and the Table path give the same rows on the golden transcripts
+    and the span cases."""
     turns, _expected = golden_transcripts()
     turns = [{k: t[k] for k in IN_SCHEMA.names} for t in turns]
     turns += [
@@ -313,7 +323,6 @@ def test_arrow_and_pandas_extractors_agree(emit_errors):
     ]
     batch = pa.RecordBatch.from_pylist(turns, schema=IN_SCHEMA)
     [arrow_out] = _make_batch_extract_arrow(emit_errors)(iter([batch]))
-    [pandas_out] = _make_batch_extract(emit_errors)(iter([batch.to_pandas()]))
-    pandas_rows = pa.Table.from_pandas(pandas_out, schema=arrow_out.schema, preserve_index=False).to_pylist()
+    table_rows = _table_rows(batch, emit_errors=emit_errors)
     assert len(arrow_out) >= 80
-    assert arrow_out.to_pylist() == pandas_rows
+    assert arrow_out.to_pylist() == pa.RecordBatch.from_pylist(table_rows, schema=arrow_out.schema).to_pylist()

@@ -4,12 +4,19 @@ element sees the same op sequence on the same operands (see
 imageops._run_banded). Pinned over adversarial shapes including band-edge
 rows, sub-min_rows images and degenerate 1-pixel axes."""
 
+import base64
 import os
 
 import numpy as np
 import pytest
+from ruled_table import ruled_table_pdf
 
 import img2table_spark.kernels.imageops as io_
+from img2table_spark.kernels.encoders import encode_png
+from img2table_spark.kernels.pdf_doc import render_pdf_text_page
+from img2table_spark.kernels.pdf_native import PdfDocument
+from img2table_spark.kernels.text import table_to_record
+from img2table_spark.operators.extract import extract_payload
 
 
 @pytest.fixture
@@ -79,3 +86,18 @@ def test_sep_filter_1d_unaffected(rng):
     x = _with_threads(1, lambda: io_._sep_filter(v, k, 0))
     y = _with_threads(4, lambda: io_._sep_filter(v, k, 0))
     assert np.array_equal(x, y)
+
+
+def test_unparsable_thread_count_takes_the_default(monkeypatch):
+    """A thread count that is not a number falls back to the affinity
+    default instead of failing every banded kernel call, which turned each
+    image and scanned-PDF turn into zero rows."""
+    doc = PdfDocument(ruled_table_pdf())
+    png = base64.b64encode(encode_png(render_pdf_text_page(doc, doc.pages()[0]))).decode()
+    monkeypatch.delenv("IMG2TABLE_KERNEL_THREADS", raising=False)
+    default = io_._kernel_threads()
+    want = [table_to_record(t) for t in extract_payload(png, "image/png")]
+    assert [(r["n_rows"], r["n_cols"]) for r in want] == [(2, 3)]
+    monkeypatch.setenv("IMG2TABLE_KERNEL_THREADS", "abc")
+    assert io_._kernel_threads() == default
+    assert [table_to_record(t) for t in extract_payload(png, "image/png")] == want

@@ -7,6 +7,10 @@ pushdown happens to reorder evaluation. q27 guards the projection with an
 explicit CASE; this test pins the guard against a corpus that would trip it.
 """
 
+import datetime as dt
+import os
+import types
+
 import pandas as pd
 
 from img2table_spark.queries import q27_repetition
@@ -846,3 +850,36 @@ def test_q107_funnel_and_block_arithmetic(spark):
         assert r["bpe_toks"] >= r["n_docs"]  # every kept doc >= 1 token
         assert r["order_checksum"] > 0
         off += r["bpe_toks"]
+
+
+class _Session:
+    """``spark`` under another applicationId, as a later session has."""
+
+    def __init__(self, spark, app_id):
+        self._spark = spark
+        self.sparkContext = types.SimpleNamespace(applicationId=app_id)
+
+    def __getattr__(self, name):
+        return getattr(self._spark, name)
+
+
+def test_q14_staging_dir_goes_with_its_session(spark, monkeypatch):
+    """The q14 corpus staged for one session is deleted once a later
+    session stages its own, and at exit (``_q14_drop_staging``)."""
+    import img2table_spark.queries as Q
+
+    monkeypatch.setattr(Q, "_Q14_DF_MEMO", {})
+    row = ("c0", 0, "user", "no tables", "text/plain", dt.datetime(2026, 1, 1))
+    monkeypatch.setattr(Q, "_q14_corpus_rows", lambda: (row,))
+    try:
+        first = Q._q14_corpus_df(_Session(spark, "app-1"))
+        [(_df, old_dir)] = Q._Q14_DF_MEMO.values()
+        assert first.count() == 1 and os.path.isdir(old_dir)
+        assert Q._q14_corpus_df(_Session(spark, "app-1")) is first
+
+        Q._q14_corpus_df(_Session(spark, "app-2"))
+        [(_df, new_dir)] = Q._Q14_DF_MEMO.values()
+        assert not os.path.exists(old_dir) and os.path.isdir(new_dir)
+    finally:
+        Q._q14_drop_staging()
+    assert not os.path.exists(new_dir) and Q._Q14_DF_MEMO == {}

@@ -2,7 +2,7 @@
 batch result, and restart consumes only new files (exactly-once sink)."""
 
 from img2table_spark.sources.transcripts import golden_transcripts_df
-from img2table_spark.streaming.stream import stream_extract
+from img2table_spark.streaming.extract_stream import stream_extract_tables as stream_extract
 
 
 def test_stream_extract_matches_batch(spark, tmp_path):
